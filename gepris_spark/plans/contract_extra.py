@@ -462,7 +462,7 @@ def q_crawl_frontier_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: the policy side is O(hosts) and broadcast; the
     discovery side never collects; ranking is a host-partitioned
-    window (the hot-host salt in assign_schedule applies when one
+    window (assign_schedule's range partitioning applies when one
     host dominates — here admission caps the per-host output at
     window/delay rows, so the window input, not output, is the skew)."""
     disc = _sitemap_discoveries_df(spark)
@@ -638,7 +638,7 @@ def q_crawl_politeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: one shuffle on host; the lag window and the
     per-host aggregate share the exchange (the politeness scheduler's
-    own partitioning — hosts are already the salt key, operators/
+    own partitioning — hosts lead its range key, operators/
     politeness.py), and the output is O(hosts). A violation here means
     the scheduler's token-bucket admission (crawl_frontier_plan) and
     the AIMD throttle (crawl_aimd_schedule) disagree with what was
@@ -707,9 +707,8 @@ FROM g GROUP BY host ORDER BY host
 _SHARD_N = 8
 _SHARD_SALTS = 32
 # a host is "hot" (gets salted) when it alone exceeds half a fair
-# shard share — the same threshold shape the politeness scheduler's
-# host salting uses (operators/politeness.py: hosts salted across
-# executors while the per-host delay contract stays intact)
+# shard share; fetch parallelism is what's sharded, while the per-host
+# delay contract keys on host (operators/politeness.py)
 _SHARD_HOT_DEN = 2 * _SHARD_N
 
 

@@ -12,8 +12,8 @@ assignment the DuckDB oracles replay:
   formula `file = r * n_files div n` needs each row's global rank r in
   (ts, event_id) order. A bare `row_number() OVER (ORDER BY ...)`
   collapses to one partition; instead we reuse the engine's skew-free
-  pattern (operators/politeness.py:202, plans/datapipe.py:q_pack_
-  sequences): range-partition on the order key, per-partition counts
+  pattern (politeness.visit_order_with_count, plans/datapipe.py:
+  q_pack_sequences): range-partition on the order key, per-partition counts
   to the driver (O(partitions) rows), exclusive prefix offsets
   broadcast back as a literal map, `row_number` windowed BY partition
   id. Every stage is parallel; nothing O(rows) touches the driver.
@@ -127,9 +127,13 @@ def write_numbered_files(
     # Clear any pre-existing arrival files (a reused root with a smaller
     # n_files, or the pre-round-4 unpadded arrival_{i}.parquet names) —
     # FileStreamSource would otherwise ingest the stale files too and
-    # silently duplicate feed rows.
+    # silently duplicate feed rows. Spark writes a `.parquet` path as a
+    # directory, so a stale entry may be one.
     for stale in glob.glob(os.path.join(src, "arrival_*.parquet")):
-        os.remove(stale)
+        if os.path.isdir(stale):
+            shutil.rmtree(stale)
+        else:
+            os.remove(stale)
     (
         assigned.select("_file", *columns)
         .repartition(n_files, "_file")

@@ -7,7 +7,8 @@ Each micro-batch:
     -> canonicalize + validate (F2, built-ins)
     -> URL-seen filter (bloom fast path + exact anti-join, A1)
     -> robots + politeness schedule (A4; per-host token bucket whose
-       sequence numbers persist across batches in a host-state table)
+       sequence number, AIMD delay and next send time persist across
+       batches in a host-state table)
     -> visit-order assignment (the replay contract)
     -> commit, step by step, each step idempotent: visit-log append
        (per-batch directory), bloom update, host-state snapshot,
@@ -38,13 +39,21 @@ from pyspark.sql import types as T
 from gepris_spark import schemas
 from gepris_spark.functions import canonical as C
 from gepris_spark.operators import politeness
+from gepris_spark.operators.urlseen import BloomUrlSeen
+from gepris_spark.store.table import SnapshotStore
 
 # target rows per range partition of the per-batch global visit order —
 # enough to amortize task launch, small enough that a partition's sort
 # fits comfortably in executor memory at any batch size
 _ORDER_ROWS_PER_PARTITION = 8192
-from gepris_spark.operators.urlseen import BloomUrlSeen
-from gepris_spark.store.table import SnapshotStore
+# snapshots of the mutable state tables (frontier, host_state) kept
+# after each committed batch: the current one and its predecessor. Each
+# commit writes a new version dir (untouched frontier buckets are
+# hardlinks, host_state is one file), so without expiration a long
+# crawl accumulates one table copy per batch — at 10^10 urls that
+# dwarfs the live table. Auto-compaction keeps as many visit_log
+# batches live, so re-runs of recent batches stay cheap.
+_SNAPSHOT_RETENTION = 2
 
 HOST_STATE = T.StructType(
     [
@@ -52,8 +61,9 @@ HOST_STATE = T.StructType(
         T.StructField("next_seq", T.LongType(), False),
         # AIMD latency feedback (politeness.py AIMD notes): the host's
         # current token-bucket delay and the logical send time of its
-        # next request. NULL when the engine runs with aimd off — the
-        # fixed-delay schedule derives scheduled_ms from host_seq alone.
+        # next request. Always written; NULL only in host state written
+        # by engine versions that derived scheduled_ms from host_seq
+        # alone — run_batch continues such a host's schedule.
         T.StructField("delay_ms", T.LongType(), True),
         T.StructField("next_ms", T.LongType(), True),
     ]
@@ -65,42 +75,20 @@ _GEPRIS_DETAIL_RE = r"^https?://[^/]*/gepris/([^/]+)/(\d+)$"
 @dataclass
 class EngineConfig:
     batch_size: int = 10_000
-    n_salts: int = 8
     bloom_buckets: int = 16
-    # 2 MiB of bits per bucket -> ~0.1% fp at 1M urls/bucket with k=5
-    # (grow bits/buckets with the frontier: a saturated bloom silently
-    # degrades to "everything pays the exact anti-join" — bits are
-    # cheap, shuffles are not)
+    # 2 MiB of bits per bucket -> ~0.1% fp at 1M urls/bucket with the
+    # bloom's k=5 (grow bits/buckets with the frontier: a saturated
+    # bloom silently degrades to "everything pays the exact anti-join"
+    # — bits are cheap, shuffles are not)
     bloom_bits: int = 1 << 24
-    bloom_hashes: int = 5
-    # URL-seen filter kind: "bloom" (default; insert+probe only) or
-    # "cuckoo" (operators/cuckooseen.py; adds delete for the
-    # vanished-marking re-discovery path). Both keep the same
-    # no-false-negative + exact-anti-join-on-hit contract, so the
-    # visit ordering is identical whichever is selected.
-    urlseen: str = "bloom"
     # detailed per-batch accounting (input/dup/invalid counts) costs 3
     # extra count jobs per batch; throughput-critical deployments can
     # turn it off — visit counts and stage timings are always kept
     detailed_metrics: bool = True
-    # deterministic AutoThrottle (politeness.py AIMD notes): per-host
-    # delay evolves from the previous batch's observed fetch costs.
-    # Off by default — the fixed-delay replay contract stays the
-    # round-1/2 byte-identical one unless a latency feed is wired in.
-    aimd: bool = False
-    # snapshots of the mutable state tables (frontier, host_state) kept
-    # after each committed batch. Each commit writes a new version dir
-    # (untouched frontier buckets are hardlinks, host_state is one
-    # file), so without expiration a long crawl accumulates one table
-    # copy per batch — at 10^10 urls that dwarfs the live table. 2 =
-    # current + its predecessor; None disables expiration (keep full
-    # time-travel history).
-    snapshot_retention: int | None = 2
     # fold the visit_log append ledger (one file-set per batch) into a
     # consolidated segment every N committed batches (Iceberg
-    # rewrite_data_files; store.compact_appends). The newest
-    # `snapshot_retention` batches stay live so re-runs of recent
-    # batches remain cheap. None disables auto-compaction.
+    # rewrite_data_files; store.compact_appends). None disables
+    # auto-compaction.
     compact_every: int | None = None
 
 
@@ -110,19 +98,9 @@ class CrawlEngine:
         self.root = root
         self.config = config or EngineConfig()
         self.store = SnapshotStore(root)
-        if self.config.urlseen == "cuckoo":
-            from gepris_spark.operators.cuckooseen import CuckooUrlSeen
-
-            # self.bloom is the engine's URL-seen slot whatever the
-            # filter kind — both classes share the filter_new contract
-            self.bloom = CuckooUrlSeen(root, n_buckets=self.config.bloom_buckets)
-        else:
-            self.bloom = BloomUrlSeen(
-                root,
-                n_buckets=self.config.bloom_buckets,
-                m_bits=self.config.bloom_bits,
-                k=self.config.bloom_hashes,
-            )
+        self.bloom = BloomUrlSeen(
+            root, n_buckets=self.config.bloom_buckets, m_bits=self.config.bloom_bits
+        )
 
     # ------------------------------------------------------------ state
     def _ledger_path(self) -> str:
@@ -245,37 +223,29 @@ class CrawlEngine:
             F.col("delay_ms").alias("_state_delay"),
             F.col("next_ms").alias("_base_ms"),
         )
-        joined = allowed.join(F.broadcast(state), "host", "left")
-        if self.config.aimd:
-            # delay_ms from apply_robots is the FLOOR (robots crawl-delay
-            # override or the 2 s start delay); the evolved AIMD delay
-            # replaces it for this batch, never dropping below the floor
-            joined = joined.withColumn("_lo_ms", F.col("delay_ms")).withColumn(
+        # delay_ms from apply_robots is the FLOOR (robots crawl-delay
+        # override or the 2 s start delay); the host's evolved AIMD delay
+        # replaces it for this batch, never dropping below the floor
+        joined = (
+            allowed.join(F.broadcast(state), "host", "left")
+            .withColumn("_lo_ms", F.col("delay_ms"))
+            .withColumn(
                 "delay_ms",
-                F.greatest(F.coalesce(F.col("_state_delay"), F.col("delay_ms")), F.col("delay_ms")),
+                F.greatest(F.coalesce(F.col("_state_delay"), F.col("_lo_ms")), F.col("_lo_ms")),
             )
+        )
         scheduled = politeness.assign_schedule(
-            joined,
-            n_salts=self.config.n_salts,
-            num_partitions=n_batch_parts,
-            cache_registry=batch_caches,
+            joined, num_partitions=n_batch_parts, cache_registry=batch_caches
         )
-        scheduled = scheduled.withColumn(
-            "host_seq", F.col("host_seq") + F.coalesce(F.col("_base_seq"), F.lit(0))
+        # logical send time continues from the host's next_ms with this
+        # batch's delay as the spacing; a host-state row without next_ms
+        # (written by a fixed-delay engine) resumes at next_seq * delay
+        base_seq = F.coalesce(F.col("_base_seq"), F.lit(0))
+        scheduled = scheduled.withColumn("host_seq", F.col("host_seq") + base_seq).withColumn(
+            "scheduled_ms",
+            F.coalesce(F.col("_base_ms"), base_seq * F.col("delay_ms"))
+            + (F.col("host_seq") - base_seq) * F.col("delay_ms"),
         )
-        if self.config.aimd:
-            # logical send time continues from the host's next_ms with
-            # this batch's (possibly re-throttled) delay as the spacing
-            scheduled = scheduled.withColumn(
-                "scheduled_ms",
-                F.coalesce(F.col("_base_ms"), F.lit(0)).cast("long")
-                + (F.col("host_seq") - F.coalesce(F.col("_base_seq"), F.lit(0)))
-                * F.col("delay_ms"),
-            )
-        else:
-            scheduled = scheduled.withColumn(
-                "scheduled_ms", F.col("host_seq") * F.col("delay_ms")
-            )
 
         prior = self.committed_batches()
         first_seq = max((r["first_seq"] + r["n_visited"] for r in prior.values()), default=0)
@@ -302,45 +272,33 @@ class CrawlEngine:
             "scheduled_ms",
             F.lit(batch_id).cast("long").alias("batch_id"),
         )
-        if self.config.aimd:
+        batch_state = ordered.groupBy("host").agg(
+            (F.max("host_seq") + 1).alias("next_seq"),
+            F.first("delay_ms").alias("_d"),
+            F.first("_lo_ms").alias("_lo"),
+            (F.max("scheduled_ms") + F.first("delay_ms")).alias("next_ms"),
+        )
+        if latencies is None:
+            # no latency feed: NULL observations hold every host's delay
+            batch_state = batch_state.withColumn("_obs", F.lit(None).cast("long"))
+        else:
             # observed latency per (host, batch): integer mean over the
             # batch's measured fetches — DIV keeps it exact so the
             # replay oracle reproduces the same delay trajectory
-            if latencies is not None:
-                obs = (
-                    visits.join(
-                        F.broadcast(latencies.select("url", "fetch_cost_ms")), "url"
-                    )
-                    .groupBy("host")
-                    .agg(F.expr("sum(fetch_cost_ms) DIV count(1)").alias("_obs"))
-                )
-            else:
-                obs = None
-            batch_state = ordered.groupBy("host").agg(
-                (F.max("host_seq") + 1).alias("next_seq"),
-                F.first("delay_ms").alias("_d"),
-                F.first("_lo_ms").alias("_lo"),
-                (F.max("scheduled_ms") + F.first("delay_ms")).alias("next_ms"),
+            obs = (
+                visits.join(F.broadcast(latencies.select("url", "fetch_cost_ms")), "url")
+                .groupBy("host")
+                .agg(F.expr("sum(fetch_cost_ms) DIV count(1)").alias("_obs"))
             )
-            if obs is not None:
-                batch_state = batch_state.join(obs, "host", "left")
-            else:
-                batch_state = batch_state.withColumn("_obs", F.lit(None).cast("long"))
-            batch_state = batch_state.select(
-                "host",
-                "next_seq",
-                politeness.aimd_next_delay(
-                    F.col("_d"), F.col("_obs"), F.col("_lo")
-                ).alias("delay_ms"),
-                "next_ms",
-            )
-        else:
-            batch_state = (
-                ordered.groupBy("host")
-                .agg((F.max("host_seq") + 1).alias("next_seq"))
-                .withColumn("delay_ms", F.lit(None).cast("long"))
-                .withColumn("next_ms", F.lit(None).cast("long"))
-            )
+            batch_state = batch_state.join(obs, "host", "left")
+        batch_state = batch_state.select(
+            "host",
+            "next_seq",
+            politeness.aimd_next_delay(F.col("_d"), F.col("_obs"), F.col("_lo")).alias(
+                "delay_ms"
+            ),
+            "next_ms",
+        )
         # hosts visited this batch have a strictly larger next_seq, so a
         # struct-max keeps the batch row and leaves untouched hosts on
         # their prior (next_seq, delay, next_ms) — one groupBy, no join
@@ -400,9 +358,8 @@ class CrawlEngine:
         self._commit_ledger(ledger_row)
         # the batch is durable (ledger fsynced) — retire snapshot dirs
         # older than the retention window; local fs metadata ops, no jobs
-        if self.config.snapshot_retention is not None:
-            for table in ("host_state", "frontier"):
-                self.store.expire_snapshots(table, keep_last=self.config.snapshot_retention)
+        for table in ("host_state", "frontier"):
+            self.store.expire_snapshots(table, keep_last=_SNAPSHOT_RETENTION)
         if (
             self.config.compact_every
             and len(self.store._live_batch_dirs("visit_log")) >= self.config.compact_every
@@ -411,7 +368,7 @@ class CrawlEngine:
                 self.spark,
                 "visit_log",
                 schemas.VISIT_LOG,
-                keep_last=max(1, self.config.snapshot_retention or 1),
+                keep_last=_SNAPSHOT_RETENTION,
             )
         return ledger_row
 

@@ -130,3 +130,24 @@ def test_reused_root_with_stale_arrival_files_is_cleared(spark, tmp_path):
     ]
     readback = pd.concat([pd.read_parquet(f) for f in files])
     assert sorted(readback["event_id"].tolist()) == sorted(pdf["event_id"].tolist())
+
+
+def test_stale_arrival_directory_is_cleared(spark, tmp_path):
+    """Spark writes a `.parquet` path as a directory of part-files; a
+    stale arrival entry of that shape must be removed like a file."""
+    src = str(tmp_path / "arrivals")
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    cols = ["event_id", "ts", "user_id", "value"]
+    stale_dir = os.path.join(src, "arrival_00000.parquet")
+    os.makedirs(stale_dir)
+    _random_events(10, 17).to_parquet(os.path.join(stale_dir, "part-00000.parquet"))
+    pdf = _random_events(31, 19)
+    df = FW.as_events_df(spark, pdf, cols)
+    with cacheutil.scope():
+        ranked, n = FW.with_global_rank(df, ["ts", "event_id"])
+        assigned = ranked.withColumn("_file", FW.contiguous_file_expr(n, 2))
+        FW.write_numbered_files(assigned, src, 2, cols, schema)
+    files = sorted(glob.glob(os.path.join(src, "arrival_*.parquet")))
+    assert all(os.path.isfile(f) for f in files) and len(files) == 2
+    readback = pd.concat([pd.read_parquet(f) for f in files])
+    assert sorted(readback["event_id"].tolist()) == sorted(pdf["event_id"].tolist())

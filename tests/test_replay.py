@@ -67,15 +67,17 @@ def test_micro_batches_exact_match(spark, tmp_path, seeds_pdf):
     assert sum(r["n_dup_or_seen"] for r in ledger) == oracle.dup_arrivals
 
 
-def test_robots_and_crawl_delay(spark, tmp_path, seeds_pdf):
+def _check_robots_and_crawl_delay(spark, tmp_path, seeds_pdf, batch_size):
     from gepris_spark.operators.politeness import ROBOTS_SCHEMA
 
     robots_rows = [("gepris.dfg.de", ["/gepris/person"], 500)]
     robots = spark.createDataFrame(robots_rows, ROBOTS_SCHEMA)
-    engine = CrawlEngine(spark, str(tmp_path / "e3"), EngineConfig(batch_size=10_000))
-    engine.run_seed_list(spark.createDataFrame(seeds_pdf), robots=robots)
+    engine = CrawlEngine(spark, str(tmp_path / "e3"), EngineConfig(batch_size=batch_size))
+    ledger = engine.run_seed_list(spark.createDataFrame(seeds_pdf), robots=robots)
+    assert len(ledger) == -(-len(seeds_pdf) // batch_size)
     oracle = replay(
         _seed_rows(seeds_pdf),
+        batch_size=batch_size,
         robots_delay_ms={"gepris.dfg.de": 500},
         disallow_prefixes={"gepris.dfg.de": ["/gepris/person"]},
     )
@@ -87,6 +89,16 @@ def test_robots_and_crawl_delay(spark, tmp_path, seeds_pdf):
         .count()
         == 0
     )
+
+
+def test_robots_and_crawl_delay(spark, tmp_path, seeds_pdf):
+    _check_robots_and_crawl_delay(spark, tmp_path, seeds_pdf, 10_000)
+
+
+def test_robots_crawl_delay_across_batches(spark, tmp_path, seeds_pdf):
+    """The robots crawl-delay override rides in the host state's
+    next_ms across batch boundaries."""
+    _check_robots_and_crawl_delay(spark, tmp_path, seeds_pdf, 25)
 
 
 def test_resume_byte_identical(spark, tmp_path, seeds_pdf):
@@ -108,6 +120,37 @@ def test_resume_byte_identical(spark, tmp_path, seeds_pdf):
     resumed.run_seed_list(seeds)
 
     assert _engine_visits(resumed) == _engine_visits(full)
+
+
+def test_resume_from_fixed_delay_host_state(spark, tmp_path, seeds_pdf):
+    """Host state written by a fixed-delay engine carries only next_seq
+    (delay_ms and next_ms NULL). Resuming over it must continue each
+    host's schedule at next_seq * delay, exactly as an uninterrupted
+    run and the oracle do."""
+    from gepris_spark.operators.politeness import ROBOTS_SCHEMA
+    from gepris_spark.streaming.microbatch import HOST_STATE
+
+    robots = spark.createDataFrame([("gepris.dfg.de", [], 3500)], ROBOTS_SCHEMA)
+    seeds = spark.createDataFrame(seeds_pdf)
+    full = CrawlEngine(spark, str(tmp_path / "full"), EngineConfig(batch_size=25))
+    full.run_seed_list(seeds, robots=robots)
+
+    old = CrawlEngine(spark, str(tmp_path / "old"), EngineConfig(batch_size=25))
+    old.run_batch(0, seeds.where(F.col("arrival_seq") < 25), robots)
+    legacy = [(r["host"], r["next_seq"], None, None) for r in old.host_state().collect()]
+    assert legacy
+    old.store.commit_snapshot(
+        spark.createDataFrame(legacy, HOST_STATE), "host_state", num_files=1
+    )
+    assert all(r["next_ms"] is None for r in old.host_state().collect())
+    resumed = CrawlEngine(spark, str(tmp_path / "old"), EngineConfig(batch_size=25))
+    resumed.run_seed_list(seeds, robots=robots)
+
+    assert _engine_visits(resumed) == _engine_visits(full)
+    _assert_match(
+        resumed,
+        replay(_seed_rows(seeds_pdf), batch_size=25, robots_delay_ms={"gepris.dfg.de": 3500}),
+    )
 
 
 def test_bloom_urlseen_no_false_negatives(spark, tmp_path):
@@ -156,7 +199,7 @@ def test_aimd_slow_host_stretches_schedule(spark, tmp_path):
     lat_df = spark.createDataFrame(
         [(u, c) for u, c in latency.items()], "url string, fetch_cost_ms long"
     )
-    engine = CrawlEngine(spark, str(tmp_path / "aimd"), EngineConfig(batch_size=8, aimd=True))
+    engine = CrawlEngine(spark, str(tmp_path / "aimd"), EngineConfig(batch_size=8))
     engine.run_seed_list(spark.createDataFrame(pdf), latencies=lat_df)
     oracle = replay(_seed_rows(pdf), batch_size=8, aimd=True, latency_ms=latency)
     _assert_match(engine, oracle)
@@ -222,14 +265,14 @@ def test_aimd_resume_byte_identical(spark, tmp_path):
         "url string, fetch_cost_ms long",
     )
     seeds = spark.createDataFrame(pdf)
-    full = CrawlEngine(spark, str(tmp_path / "afull"), EngineConfig(batch_size=6, aimd=True))
+    full = CrawlEngine(spark, str(tmp_path / "afull"), EngineConfig(batch_size=6))
     full.run_seed_list(seeds, latencies=lat_df)
 
-    killed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6, aimd=True))
+    killed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6))
     from gepris_spark.operators.politeness import empty_robots
 
     killed.run_batch(0, seeds.where(F.col("arrival_seq") < 6), empty_robots(spark), latencies=lat_df)
-    resumed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6, aimd=True))
+    resumed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6))
     resumed.run_seed_list(seeds, latencies=lat_df)
     assert _engine_visits(resumed) == _engine_visits(full)
 

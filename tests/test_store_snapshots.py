@@ -157,7 +157,7 @@ def test_engine_config_retention_bounds_versions(spark, store_dir):
     engine = CrawlEngine(
         spark,
         os.path.join(store_dir, "run"),
-        EngineConfig(batch_size=8, detailed_metrics=False, snapshot_retention=2),
+        EngineConfig(batch_size=8, detailed_metrics=False),
     )
     ledger = engine.run_seed_list(seeds)
     assert len(ledger) >= 3  # enough batches that retention has bitten

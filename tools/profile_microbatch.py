@@ -1,5 +1,5 @@
 """Per-stage timing of the crawl engine's micro-batch: run the
-q_crawl_aimd shape (2 tiny batches, aimd on) twice warm and print each
+q_crawl_aimd shape (2 tiny batches, latency feed on) twice warm and print each
 ledger row's stage_sec, then a single larger replay batch for the
 throughput-path picture."""
 
@@ -22,7 +22,7 @@ def aimd_once(spark):
     engine = CrawlEngine(
         spark,
         tempfile.mkdtemp(prefix="prof_aimd_"),
-        EngineConfig(batch_size=46, aimd=True, bloom_buckets=4,
+        EngineConfig(batch_size=46, bloom_buckets=4,
                      bloom_bits=1 << 18, detailed_metrics=False),
     )
     t0 = time.monotonic()
